@@ -99,6 +99,49 @@ def check_extract_bulk(inputs: Path, manifest: dict, seed: int, out: Path) -> li
     return problems
 
 
+def check_corpus_build(inputs: Path, manifest: dict, seed: int, out: Path) -> list[str]:
+    """The ``metrics.json`` ledger against the planted counts, and the
+    shards against the ledger's ``pack`` entry."""
+    problems: list[str] = []
+    metrics_path = out / "metrics.json"
+    if not metrics_path.exists():
+        return ["metrics.json missing"]
+    stages = json.loads(metrics_path.read_text())["stages"]
+    n, kept = manifest["n_docs"], manifest["kept"]
+    if stages["extract"] != {"in": n, "out": n}:
+        problems.append(f"extract ledger {stages['extract']}, expected {n} in and out")
+    rejects = stages["curate"]["rejects_by_reason"]
+    if rejects != manifest["rejects"] or stages["curate"]["out"] != kept:
+        problems.append(
+            f"curate ledger {stages['curate']}, planted rejects {manifest['rejects']} "
+            f"and {kept} kept"
+        )
+    split = stages["split"]
+    if sum(split.values()) != kept:
+        problems.append(f"split ledger {split} does not add up to the {kept} kept documents")
+    for name, count in split.items():
+        if name == "train":
+            continue
+        rows = _read_dir(out / name).num_rows if (out / name).exists() else 0
+        if rows != count:
+            problems.append(f"{name} split has {rows} documents, ledger says {count}")
+
+    pack = stages["pack"]
+    shards = _read_dir(out / "train_shards").select(["seq_id", "n_tokens", "shard"]).to_pylist()
+    seq_ids = sorted(r["seq_id"] for r in shards)
+    if seq_ids != list(range(pack["n_sequences"])):
+        problems.append(f"shards hold {len(seq_ids)} sequences, ledger says {pack['n_sequences']}")
+    if sum(r["n_tokens"] for r in shards) != pack["n_tokens"]:
+        problems.append("shard token total differs from the pack ledger")
+    per_shard = manifest["seqs_per_shard"]
+    if any(r["shard"] != r["seq_id"] // per_shard for r in shards):
+        problems.append("a sequence sits in the wrong shard")
+    last = max(seq_ids, default=-1)
+    if any(r["n_tokens"] != pack["seq_len"] for r in shards if r["seq_id"] != last):
+        problems.append(f"a sequence other than the last is not {pack['seq_len']} tokens")
+    return problems
+
+
 def check_refresh(inputs: Path, manifest: dict, seed: int, out: Path) -> list[str]:
     from wpextract_spark.htmlkit import parse_html
     from wpextract_spark.kernel.content import extract_content

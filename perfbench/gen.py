@@ -7,8 +7,11 @@ changed) are recorded in ``manifest.json`` next to the inputs, so the
 output checks compare against what was built, never against a value the
 timed code path computed.
 
-Inputs live under ``perfbench/.cache/<workload>-s<seed>-<size>/`` and are
-reused when the same (workload, seed, size) comes back.
+Inputs live under ``perfbench/.cache/<workload>-s<seed>-<size>-<src>/`` and
+are reused when the same (workload, seed, size) comes back for the same
+package sources: ``<src>`` is a digest of ``wpextract_spark``'s source
+files, because the generators call the package, so two commits never share
+inputs.
 """
 
 from __future__ import annotations
@@ -30,8 +33,8 @@ E2E = ROOT / "tests" / "data" / "e2e"
 CACHE = Path(__file__).resolve().parent / ".cache"
 
 # -- workload sizes -----------------------------------------------------------
-# Sized so one iteration on 4 cores takes a few seconds and a whole run
-# (cold start, restarts, warm-up, two timed iterations) stays near a minute.
+# Sized so a whole run (cold start, two restarts, a warm-up and the timed
+# iterations) stays within the run budget README.md works out.
 
 #: extract-bulk: synthetic pages (~5 KB), re-hosted copies of each real
 #: scraped page (~50 KB, with head/script/style), and the adversarial set.
@@ -44,20 +47,21 @@ BULK_DEEP = 3
 BULK_BIG_BYTES = 2_000_000
 BULK_BIG = 2
 
-#: The corpus behind the corpus-layer probes: filter-passing base documents
-#: plus the planted sets.
-CORPUS_BASE = 16
+#: corpus-build: filter-passing base documents, log-uniform in length up
+#: to CORPUS_MAX_WORDS, plus the planted sets.
+CORPUS_BASE = 12
 CORPUS_EXACT_DUPS = 2
 CORPUS_NEAR_DUPS = 2
 CORPUS_GOPHER_REJECTS = 2
 CORPUS_C4_REJECTS = 2
 CORPUS_MIN_WORDS = 60
-CORPUS_MAX_WORDS = 2000
+CORPUS_MAX_WORDS = 3000
 CORPUS_WARC_FILES = 8
 CORPUS_SEQ_LEN = 512
 CORPUS_SEQS_PER_SHARD = 16
 
-#: refresh: crawl A, and crawl B = A with planted changed/added/removed shares.
+#: refresh (the extract-bulk traced run's probe): crawl A, and crawl B = A
+#: with planted changed/added/removed shares.
 REFRESH_PAGES = 1000
 REFRESH_CHANGED = 0.10
 REFRESH_ADDED = 0.05
@@ -253,11 +257,13 @@ def corpus_documents(seed: int) -> tuple[list[dict], dict]:
     """Rows (url, html, doc_id, text_words) and the planted reject counts."""
     rng = _rng(seed, "corpus")
     vocab = _zipf_sampler()[0]
-    # Stratified log-uniform lengths: the same length multiset shape for
-    # every seed, so a seed changes content, not the amount of work.
+    # Log-uniform lengths on a fixed grid from CORPUS_MIN_WORDS to
+    # CORPUS_MAX_WORDS, the same for every seed: the n-gram verify is
+    # quadratic in length, so a seed that drew a longer longest document
+    # would do measurably more work. A seed changes content, not the work.
     n = CORPUS_BASE
     lo, hi = math.log(CORPUS_MIN_WORDS), math.log(CORPUS_MAX_WORDS)
-    lengths = [int(math.exp(lo + (hi - lo) * (i + rng.random()) / n)) for i in range(n)]
+    lengths = [int(math.exp(lo + (hi - lo) * i / (n - 1))) for i in range(n)]
     # Which doc id (and url, and so which partition) gets which length is
     # the same for every seed, so the long documents land in the same tasks.
     random.Random(0).shuffle(lengths)
@@ -351,12 +357,17 @@ def gen_corpus_build(seed: int, out: Path) -> dict:
         part = rows[f::CORPUS_WARC_FILES]
         name = f"corpus-{f:02d}.warc.gz"
         (warc_dir / name).write_bytes(build_warc(part, filename=name))
+    # The same documents as a pages table: read only by the traced run's
+    # probes, never by the timed command.
+    _write_pages(out / "pages.parquet", [r["url"] for r in rows], [r["html"] for r in rows])
     n = len(rows)
     kept = n - sum(rejects.values())
     return {
         "n_docs": n,
         "html_bytes": sum(len(r["html"]) for r in rows),
         "rejects": rejects,
+        # Exact copies are near-duplicates too: the verified pairs.
+        "dup_pairs": CORPUS_EXACT_DUPS + CORPUS_NEAR_DUPS,
         "kept": kept,
         "seq_len": CORPUS_SEQ_LEN,
         "seqs_per_shard": CORPUS_SEQS_PER_SHARD,
@@ -428,10 +439,19 @@ GENERATORS = {
 }
 
 
+@functools.cache
+def package_digest() -> str:
+    """Digest of the package's source files."""
+    h = hashlib.sha256()
+    for path in sorted((ROOT / "wpextract_spark").rglob("*.py")):
+        h.update(path.relative_to(ROOT).as_posix().encode() + b"\0" + path.read_bytes())
+    return h.hexdigest()[:12]
+
+
 def generate(workload: str, seed: int, root: Path = CACHE) -> tuple[Path, dict]:
     """Write (or reuse) the inputs of ``workload`` for ``seed``; returns the
     input directory and its manifest."""
-    out = root / f"{workload}-s{seed}-{SIZES[workload]}"
+    out = root / f"{workload}-s{seed}-{SIZES[workload]}-{package_digest()}"
     manifest = out / "manifest.json"
     if manifest.exists():
         return out, json.loads(manifest.read_text())

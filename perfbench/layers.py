@@ -3,7 +3,7 @@
 Three sources, none of them inside ``wpextract_spark``:
 
 1. Spark's own event log, switched on through the benchmark session's
-   config for the traced iteration only. Jobs are attributed to the package
+   config for the traced part of the run only. Jobs are attributed to the package
    call sites recorded for them (``collect at .../plans/corpus_build.py:86``;
    :class:`PackageCallSites` fills in the jobs PySpark leaves without one);
    what no call site claims is ``plans.unattributed_s``. Tasks give the
@@ -15,7 +15,8 @@ Three sources, none of them inside ``wpextract_spark``:
 
 A layer the workload does not use reports 0 (README.md lists which metric
 applies to which workload). Tracing overhead is the traced iteration's
-wall time minus the wall time of the untraced iteration just before it.
+wall time minus that of an untraced iteration; each is the first iteration
+on a freshly restarted session.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 
 STRATA = ("small", "p50", "p99")
+CORPUS_STAGES = ("extract", "curate", "split", "pack", "profile")
 
 #: Per-layer metrics (``--trace 1``): name -> unit.
 LAYER_UNITS = {
@@ -67,6 +69,7 @@ LAYER_UNITS = {
     "plans.incremental.corpus_write_s": "s",
     "plans.incremental.diff_write_s": "s",
     "plans.incremental.metrics_s": "s",
+    **{f"plans.corpus_build.{stage}_s": "s" for stage in CORPUS_STAGES},
     "plans.unattributed_s": "s",
     "plans.incremental.kernel_docs": "count",
     "plans.incremental.kernel_savings": "ratio",
@@ -131,6 +134,17 @@ def call_site_buckets(pkg: Path) -> list[tuple[str, int, int, str]]:
     inc = _markers(pkg / "plans" / "incremental.py", {"metrics": "def update_metrics("})
     if inc:
         out.append(("plans/incremental.py", inc["metrics"], 10**9, "plans.incremental.metrics_s"))
+    # build_training_corpus's numbered stage comments; decontamination (no
+    # benchmark set is given, so it issues no job) counts with curation.
+    corpus = _markers(pkg / "plans" / "corpus_build.py", {
+        "extract": "# 1. extract", "curate": "# 2. curate", "split": "# 4. split",
+        "pack": "# 5. pack", "profile": "# 6. profile",
+    })
+    if len(corpus) == len(CORPUS_STAGES):
+        ends = [corpus[s] - 1 for s in CORPUS_STAGES[1:]] + [10**9]
+        for stage, end in zip(CORPUS_STAGES, ends):
+            out.append(("plans/corpus_build.py", corpus[stage], end,
+                        f"plans.corpus_build.{stage}_s"))
     return out
 
 
@@ -202,6 +216,16 @@ def read_event_log(event_dir: Path) -> list[dict]:
     return events
 
 
+def _covered(spans: list[tuple[float, float]]) -> float:
+    """Seconds covered by the union of (start ms, end ms) spans."""
+    total, reach = 0.0, float("-inf")
+    for a, b in sorted(spans):
+        if b > reach:
+            total += b - max(a, reach)
+            reach = b
+    return total / 1000
+
+
 def _pct(values: list[float], q: float) -> float:
     if not values:
         return 0.0
@@ -227,17 +251,19 @@ def engine_metrics(events: list[dict], t0_ms: float, t1_ms: float, wall: float,
         elif e["Event"] == "SparkListenerJobEnd" and e["Job ID"] in jobs:
             jobs[e["Job ID"]]["end"] = e["Completion Time"]
 
-    out = {m: 0.0 for _, _, _, m in buckets}
-    attributed = 0.0
+    spans: dict[str, list[tuple[float, float]]] = {m: [] for _, _, _, m in buckets}
     for job in jobs.values():
-        secs = ((job["end"] or job["start"]) - job["start"]) / 1000
+        span = (job["start"], job["end"] or job["start"])
         for m in _SITE.finditer(job["site"]):
             path, line = m.group(1), int(m.group(2))
             hit = next((b for b in buckets if path.endswith(b[0]) and b[1] <= line <= b[2]), None)
             if hit:
-                out[hit[3]] += secs
-                attributed += secs
+                spans[hit[3]].append(span)
                 break
+    # Wall time covered by each call site's jobs; AQE runs some jobs
+    # concurrently, so overlapping jobs count once.
+    out = {m: _covered(v) for m, v in spans.items()}
+    attributed = _covered([x for v in spans.values() for x in v])
     out["plans.unattributed_s"] = max(wall - attributed, 0.0)
 
     durs, by_stage = [], {}
@@ -424,47 +450,6 @@ def warc_source(spark, warc_glob: str, mb: float) -> float:
     return mb / secs
 
 
-def corpus_operators(spark, docs_path: Path, manifest: dict, work: Path) -> dict:
-    """Curation, dedup, packing and the shard sink, each over the corpus's
-    own extracted documents (materialized beforehand, so each timing is
-    that operator alone)."""
-    from pyspark.sql import functions as F
-
-    from wpextract_spark.operators.curation import curation_pipeline
-    from wpextract_spark.operators.dedup import lsh_candidate_pairs, ngram_jaccard_pairs
-    from wpextract_spark.operators.packing import pack_sequences
-    from wpextract_spark.sinks.shards import write_training_shards
-
-    docs = spark.read.parquet(str(docs_path))
-    out = {}
-    verdicts = curation_pipeline(docs)
-    out["operators.curation.s"] = _noop(verdicts)
-    reasons = {r["reject_reason"]: r["n"] for r in
-               verdicts.groupBy("reject_reason").agg(F.count("*").alias("n")).collect()}
-    for r in ("gopher", "c4", "exact_dup", "near_dup"):
-        out[f"operators.curation.rejects.{r}"] = reasons.get(r, 0)
-    # The propose and verify parameters curation_pipeline uses.
-    cands = lsh_candidate_pairs(docs, "doc_id", "text", k=8, bands=2, max_bucket=100).cache()
-    n_cands = cands.count()
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.05, candidates=cands
-    ).cache()
-    out["operators.dedup.ngram_s"] = _noop(pairs)
-    n_pairs = pairs.count()
-    pairs.unpersist()
-    cands.unpersist()
-    out["operators.dedup.candidate_pairs"] = n_cands
-    out["operators.dedup.verified_pairs"] = n_pairs
-    out["operators.dedup.precision"] = n_pairs / n_cands if n_cands else 0.0
-    seqs = pack_sequences(docs, seq_len=manifest["seq_len"]).cache()
-    out["operators.packing.s"] = _noop(seqs)
-    t0 = time.perf_counter()
-    write_training_shards(seqs, str(work / "shards-probe"), manifest["seqs_per_shard"])
-    out["sinks.shards.write_s"] = time.perf_counter() - t0
-    seqs.unpersist()
-    return out
-
-
 def site_probes(spark, e2e: Path, work: Path) -> dict:
     """The site pipeline's layers over the reference site: the six entity
     loads (with the columns the pipeline asks for), the scrape crawl,
@@ -509,13 +494,38 @@ def site_probes(spark, e2e: Path, work: Path) -> dict:
     return out
 
 
-def refresh_probe(spark, prev_path: Path, pages_path: Path) -> dict:
-    """The snapshot diff alone, and the incremental plan's own ledger, for
-    the previous corpus against the new crawl."""
+def refresh_probe(spark, seed: int, work: Path) -> tuple[dict, tuple, list]:
+    """The ``refresh`` command once over its generated crawl pair (PREV is
+    built in this run's work directory, untimed), its output checked; then
+    the snapshot diff alone and the incremental plan's own ledger. Returns
+    the metrics, the command's (start ms, end ms, wall s) window for the
+    event log, and the check's problems."""
+    import contextlib
+    import io
+
+    import checks
+    import gen
     from pyspark.sql import functions as F
 
+    from wpextract_spark import cli
     from wpextract_spark.operators.snapshot import snapshot_diff
-    from wpextract_spark.plans.incremental import incremental_update, update_metrics
+    from wpextract_spark.plans.incremental import (
+        extract_pages,
+        incremental_update,
+        update_metrics,
+    )
+
+    inputs, manifest = gen.generate("refresh", seed)
+    prev_path, out = work / "refresh-prev", work / "refresh-out"
+    extract_pages(spark.read.parquet(str(inputs / "crawl_a.parquet"))).write.parquet(
+        str(prev_path))
+    pages_path = inputs / "crawl_b.parquet"
+    t0_ms, t0 = time.time() * 1000, time.perf_counter()
+    with PackageCallSites(spark, gen.ROOT), contextlib.redirect_stdout(io.StringIO()):
+        code = cli.main(["refresh", str(prev_path), str(pages_path), str(out)])
+    window = (t0_ms, time.time() * 1000, time.perf_counter() - t0)
+    problems = ([f"refresh exited {code}"] if code
+                else checks.check_refresh(inputs, manifest, seed, out))
 
     prev = spark.read.parquet(str(prev_path))
     pages = spark.read.parquet(str(pages_path))
@@ -527,23 +537,66 @@ def refresh_probe(spark, prev_path: Path, pages_path: Path) -> dict:
         "operators.snapshot.diff_s": diff_s,
         "plans.incremental.kernel_docs": metrics["extracted"],
         "plans.incremental.kernel_savings": metrics["kernel_savings"],
-    }
+    }, window, problems
 
 
-def corpus_probes(spark, seed: int, work: Path) -> dict:
-    """The corpus-build layers over the seed's generated WARC corpus (see
-    ``gen.corpus_documents``): curation, dedup, packing and the shard sink
-    over the documents extracted from it."""
-    import gen
+def corpus_operators(spark, docs_path: Path, manifest: dict, work: Path) -> tuple[dict, list]:
+    """Curation, dedup, packing and the shard sink, each over the corpus's
+    own extracted documents (materialized beforehand, so each timing is
+    that operator alone). The reject and pair counts are checked against
+    the planted ones: a mismatch is a problem, never a better number."""
+    from pyspark.sql import functions as F
+
+    from wpextract_spark.operators.curation import curation_pipeline
+    from wpextract_spark.operators.dedup import lsh_candidate_pairs, ngram_jaccard_pairs
+    from wpextract_spark.operators.packing import pack_sequences
+    from wpextract_spark.sinks.shards import write_training_shards
+
+    docs = spark.read.parquet(str(docs_path))
+    out, problems = {}, []
+    verdicts = curation_pipeline(docs)
+    out["operators.curation.s"] = _noop(verdicts)
+    reasons = {r["reject_reason"]: r["n"] for r in
+               verdicts.where(~F.col("keep")).groupBy("reject_reason")
+               .agg(F.count("*").alias("n")).collect()}
+    for r in ("gopher", "c4", "exact_dup", "near_dup"):
+        out[f"operators.curation.rejects.{r}"] = reasons.get(r, 0)
+    if reasons != manifest["rejects"]:
+        problems.append(f"curation rejects {reasons} != planted {manifest['rejects']}")
+    # The propose and verify parameters curation_pipeline uses.
+    cands = lsh_candidate_pairs(docs, "doc_id", "text", k=8, bands=2, max_bucket=100).cache()
+    n_cands = cands.count()
+    pairs = ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.05, candidates=cands
+    ).cache()
+    out["operators.dedup.ngram_s"] = _noop(pairs)
+    n_pairs = pairs.count()
+    pairs.unpersist()
+    cands.unpersist()
+    if n_pairs != manifest["dup_pairs"]:
+        problems.append(f"{n_pairs} verified duplicate pairs, planted {manifest['dup_pairs']}")
+    out["operators.dedup.candidate_pairs"] = n_cands
+    out["operators.dedup.verified_pairs"] = n_pairs
+    out["operators.dedup.precision"] = n_pairs / n_cands if n_cands else 0.0
+    seqs = pack_sequences(docs, seq_len=manifest["seq_len"]).cache()
+    out["operators.packing.s"] = _noop(seqs)
+    t0 = time.perf_counter()
+    write_training_shards(seqs, str(work / "shards-probe"), manifest["seqs_per_shard"])
+    out["sinks.shards.write_s"] = time.perf_counter() - t0
+    seqs.unpersist()
+    return out, problems
+
+
+def corpus_probes(spark, inputs: Path, manifest: dict, work: Path) -> tuple[dict, list]:
+    """The corpus layers over the documents extracted from the workload's
+    own WARC files."""
     from pyspark.sql import functions as F
 
     from wpextract_spark.operators.extract import content_extract_udf
     from wpextract_spark.sources.warc import read_warc_records, warc_to_pages
 
-    inputs, manifest = gen.generate("corpus-build", seed)
-    glob = str(inputs / "warc" / "*.warc.gz")
     docs_path = work / "corpus-docs.parquet"
-    pages = warc_to_pages(read_warc_records(spark, glob))
+    pages = warc_to_pages(read_warc_records(spark, str(inputs / "warc")))
     pages.select(
         F.xxhash64("url").alias("doc_id"),
         content_extract_udf()("html", "url")["text"].alias("text"),
@@ -563,16 +616,19 @@ def _input_docs(workload) -> list[tuple[str, bytes]]:
 
 
 def traced(args, work: Path, workload, it, session: dict, restart, cores: int) -> dict:
-    """One untraced iteration, one traced iteration on a session with the
-    event log on, then the layer probes; returns every per-layer metric."""
+    """After the warm-up: one untraced iteration on a restarted session and
+    one traced iteration on a session restarted with the event log on, so
+    both are the first iteration after a restart and differ only by the
+    tracing; then the layer probes. Returns every per-layer metric."""
     import gen
 
+    workload.spark.stop()
+    workload.spark = restart(None)
     untraced = it.one()
 
     workload.spark.stop()
     event_dir = work / "events"
-    spark = restart(event_dir)
-    workload.spark = spark
+    spark = workload.spark = restart(event_dir)
     t0_ms = time.time() * 1000
     with PackageCallSites(spark, gen.ROOT):
         wall = it.one()
@@ -592,38 +648,39 @@ def traced(args, work: Path, workload, it, session: dict, restart, cores: int) -
 
     docs = _input_docs(workload)
     m.update(kernel_probes(docs, args.seed))
-    rng = random.Random(args.seed)
-    kernel_rate = kernel_docs_per_s(rng.sample(docs, min(len(docs), 200)))
     lap("in-process kernel")
-
-    from wpextract_spark.sources.warcgen import build_warc
-
-    sample = [{"url": u, "html": h, "doc_id": i}
-              for i, (u, h) in enumerate(rng.sample(docs, min(len(docs), 200)))]
-    warc_dir = work / "warc-probe"
-    warc_dir.mkdir()
-    blob = build_warc(sample)
-    (warc_dir / "sample.warc.gz").write_bytes(blob)
-    m["kernel.warc.mb_per_s"] = warc_mb_per_s([blob])
-    m["sources.warc.mb_per_s"] = warc_source(spark, str(warc_dir), len(blob) / 1e6)
-    lap("warc")
-    pages_path = workload.inputs / workload.pages
-    m.update(ladder(spark, pages_path, cores, kernel_rate, work))
-    lap("ladder")
-    # The two dropped workloads' layers, one set per traced run so that
-    # neither run grows much past the other.
-    if workload.name == "extract-bulk":
-        m.update(corpus_probes(spark, args.seed, work))
+    refresh_window = None
+    if workload.name == "corpus-build":
+        warc = workload.inputs / "warc"
+        blobs = [f.read_bytes() for f in sorted(warc.iterdir())]
+        mb = sum(len(b) for b in blobs) / 1e6
+        m["kernel.warc.mb_per_s"] = warc_mb_per_s(blobs)
+        m["sources.warc.mb_per_s"] = warc_source(spark, str(warc), mb)
+        lap("warc")
+        found, problems = corpus_probes(spark, workload.inputs, workload.manifest, work)
+        m.update(found)
+        it.record(problems)
         lap("corpus")
     else:
-        m.update(refresh_probe(spark, workload.inputs / "prev", pages_path))
+        sample = random.Random(args.seed).sample(docs, min(len(docs), 200))
+        m.update(ladder(spark, workload.inputs / workload.pages, cores,
+                        kernel_docs_per_s(sample), work))
+        lap("ladder")
+        # The layers of the two user paths that are not workloads (README.md).
+        found, refresh_window, problems = refresh_probe(spark, args.seed, work)
+        m.update(found)
+        it.record(problems)
         lap("refresh")
         m.update(site_probes(spark, gen.E2E, work))
         lap("site")
 
     spark.stop()
-    m.update(engine_metrics(read_event_log(event_dir), t0_ms, t1_ms, wall, cores,
-                            call_site_buckets(gen.ROOT / "wpextract_spark")))
+    events = read_event_log(event_dir)
+    buckets = call_site_buckets(gen.ROOT / "wpextract_spark")
+    m.update(engine_metrics(events, t0_ms, t1_ms, wall, cores, buckets))
+    if refresh_window is not None:
+        found = engine_metrics(events, *refresh_window, cores, buckets)
+        m.update({k: v for k, v in found.items() if k.startswith("plans.incremental.")})
     unknown = set(m) - set(LAYER_UNITS)
     if unknown:
         raise RuntimeError(f"undeclared per-layer metrics: {sorted(unknown)}")

@@ -3,16 +3,16 @@ entry points, end to end, with a traced run for per-layer numbers.
 
 Usage (from the repository root)::
 
-    python3 perfbench/run.py --workload extract-bulk --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload extract-bulk --seed 1 --seconds 15 --trace 0
 
 One process, one SparkSession on ``local[<cores>]`` (cores = nproc). Each run:
 
-1. starts the session three times (the first start is cold, from process
-   start; the next two stop and restart it in the same JVM) and reports
-   the median as ``setup_s``;
+1. starts the session (cold, from process start); an untraced run restarts
+   it twice more in the same JVM and reports the median of the three as
+   ``setup_s``;
 2. generates the workload's inputs from ``--seed`` (cached, untimed);
-3. runs one warm-up iteration, then timed iterations until ``--seconds``
-   have been measured (at least two), checking every output;
+3. runs the workload's warm-up iterations, then ``--seconds`` worth of
+   timed iterations (a count fixed per workload), checking every output;
 4. prints one JSON line: ``--trace 0`` gives the end-to-end metrics,
    ``--trace 1`` the per-layer metrics (see ``layers.py``).
 
@@ -45,12 +45,6 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 CORES = os.cpu_count() or 1
 SETUP_CYCLES = 3
-#: Discarded iterations: JIT, codegen and worker caches.
-WARMUP_ITERATIONS = 1
-#: Iterations keep getting a little faster after the warm-up, so every run
-#: times at least two, and the window is sized to time about two: a run's
-#: median then does not depend on how many iterations fit.
-MIN_TIMED = 2
 
 #: End-to-end metrics (``--trace 0``): name -> unit.
 E2E_UNITS = {
@@ -188,15 +182,20 @@ class Workload:
     name = ""
     #: The pages parquet (under the input directory) the command reads.
     pages = ""
+    #: Discarded iterations before timing: JIT, codegen and worker caches.
+    warmup = 1
+    #: Nominal seconds of one warm iteration on 4 cores. A run times
+    #: round(--seconds / iteration_s) iterations, at least one: a count fixed
+    #: by the arguments, not by the host's speed, because iterations keep
+    #: getting faster for a while and a median must cover the same ones in
+    #: every run.
+    iteration_s = 1.0
 
     def __init__(self, spark, inputs: Path, manifest: dict, seed: int) -> None:
         self.spark = spark
         self.inputs = inputs
         self.manifest = manifest
         self.seed = seed
-
-    def prepare(self) -> None:
-        """Untimed set-up of inputs that need Spark."""
 
     def run_once(self, out: Path) -> None:
         raise NotImplementedError
@@ -208,6 +207,10 @@ class Workload:
 class ExtractBulk(Workload):
     name = "extract-bulk"
     pages = "pages.parquet"
+    #: Iteration times fall fast for three iterations after the first (10 s,
+    #: then 4-7 s, then ~3.5 s on 4 cores) and slowly after that.
+    warmup = 3
+    iteration_s = 3.0
     #: Resume granularity: two chunks keep the per-chunk fixed cost small
     #: next to the kernel work while still exercising the chunk protocol.
     n_chunks = 2
@@ -224,40 +227,36 @@ class ExtractBulk(Workload):
         return checks.check_extract_bulk(self.inputs, self.manifest, self.seed, out)
 
 
-class Refresh(Workload):
-    name = "refresh"
-    pages = "crawl_b.parquet"
-
-    def prepare(self) -> None:
-        """PREV = ``extract_pages(crawl_a)``: the previous run's corpus, built
-        once per input set by the package's own extraction stage."""
-        prev = self.inputs / "prev"
-        if prev.exists():
-            return
-        from wpextract_spark.plans.incremental import extract_pages
-
-        tmp = self.inputs / "prev.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        crawl_a = self.spark.read.parquet(str(self.inputs / "crawl_a.parquet"))
-        extract_pages(crawl_a).write.parquet(str(tmp))
-        tmp.rename(prev)
+class CorpusBuild(Workload):
+    name = "corpus-build"
+    #: The generated documents as a pages table, for the traced run's
+    #: probes; the command itself reads the WARC files.
+    pages = "pages.parquet"
+    #: The first iteration (~35 s: code generation for ~80 jobs) is the only
+    #: slow one; later ones are steady at ~20 s.
+    warmup = 1
+    iteration_s = 20.0
 
     def run_once(self, out: Path) -> None:
         from wpextract_spark import cli
 
-        argv = ["refresh", str(self.inputs / "prev"), str(self.inputs / self.pages), str(out)]
+        argv = [
+            "build-corpus", str(self.inputs / "warc"), str(out), "--input-format", "warc",
+            "--seq-len", str(self.manifest["seq_len"]),
+            "--seqs-per-shard", str(self.manifest["seqs_per_shard"]),
+        ]
         with contextlib.redirect_stdout(io.StringIO()):
             code = cli.main(argv)
         if code != 0:
-            raise RuntimeError(f"refresh exited {code}")
+            raise RuntimeError(f"build-corpus exited {code}")
 
     def check(self, out: Path) -> list[str]:
         import checks
 
-        return checks.check_refresh(self.inputs, self.manifest, self.seed, out)
+        return checks.check_corpus_build(self.inputs, self.manifest, self.seed, out)
 
 
-WORKLOADS = {w.name: w for w in (ExtractBulk, Refresh)}
+WORKLOADS = {w.name: w for w in (ExtractBulk, CorpusBuild)}
 
 
 # -- measurement -----------------------------------------------------------------
@@ -308,13 +307,15 @@ class Iterations:
             self.failed += 1
         return wall
 
-    def until(self, seconds: float) -> None:
-        """Timed iterations until ``seconds`` have passed, and at least
-        ``MIN_TIMED`` of them."""
-        t_end = time.perf_counter() + seconds
-        for _ in range(MIN_TIMED):
-            self.one()
-        while time.perf_counter() < t_end:
+    def record(self, problems: list[str]) -> None:
+        """A checked operation outside the timed iterations (a probe)."""
+        self.attempted += 1
+        self.failed += 1 if problems else 0
+        self.problems.extend(problems[:5])
+
+    def timed(self, seconds: float) -> None:
+        """The timed iterations of a ``seconds``-long measurement."""
+        for _ in range(max(1, round(seconds / self.workload.iteration_s))):
             self.one()
 
 
@@ -335,22 +336,22 @@ def run(args: argparse.Namespace, work: Path) -> dict:
     import gen
 
     spark, session_s, warm_s = start_session()
-    cold = time.perf_counter() - T_PROCESS
-    setup = [cold]
-    for _ in range(SETUP_CYCLES - 1):
+    setup = [time.perf_counter() - T_PROCESS]
+    # setup_s is an end-to-end metric only; a traced run reports the cold
+    # start's parts instead.
+    for _ in range(0 if args.trace else SETUP_CYCLES - 1):
         spark.stop()
         t0 = time.perf_counter()
         spark, _, _ = start_session()
         setup.append(time.perf_counter() - t0)
     inputs, manifest = gen.generate(args.workload, args.seed)
     workload = WORKLOADS[args.workload](spark, inputs, manifest, args.seed)
-    workload.prepare()
     it = Iterations(workload, work)
-    for _ in range(WARMUP_ITERATIONS):
+    for _ in range(workload.warmup):
         it.one(timed=False)
 
     if not args.trace:
-        it.until(args.seconds)
+        it.timed(args.seconds)
         metrics = end_to_end(it, setup, manifest)
     else:
         import layers
@@ -368,6 +369,7 @@ def run(args: argparse.Namespace, work: Path) -> dict:
         "_detail": {
             "samples": len(it.walls),
             "walls_s": [round(w, 4) for w in it.walls],
+            "rss_mb": [round(r) for r in it.rss],
             "setup_s": [round(s, 4) for s in setup],
             "problems": it.problems[:10],
         },

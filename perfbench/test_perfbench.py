@@ -186,6 +186,72 @@ def test_refresh_check(small, monkeypatch, tmp_path, corrupt):
     assert checks.check_refresh(inputs, manifest, 3, out)
 
 
+# -- corpus-build -------------------------------------------------------------------
+
+
+def _corpus_output(manifest: dict, out: Path) -> None:
+    """A build-corpus output that agrees with the planted counts: the
+    ledger, one val and one test document, and three packed sequences."""
+    n, kept, seq_len = manifest["n_docs"], manifest["kept"], manifest["seq_len"]
+    stages = {
+        "extract": {"in": n, "out": n},
+        "curate": {"in": n, "out": kept, "rejects_by_reason": manifest["rejects"]},
+        "split": {"train": kept - 2, "val": 1, "test": 1},
+        "pack": {"n_sequences": 3, "n_tokens": 2 * seq_len + 5, "seq_len": seq_len},
+    }
+    out.mkdir(parents=True)
+    (out / "metrics.json").write_text(json.dumps({"stages": stages}))
+    for name in ("val", "test"):
+        (out / name).mkdir()
+        pq.write_table(pa.table({"url": [f"https://x/{name}"], "text": ["t"]}),
+                       out / name / "part-0.parquet")
+    shard = out / "train_shards" / "shard=0"
+    shard.mkdir(parents=True)
+    pq.write_table(pa.table({"seq_id": [0, 1, 2], "n_tokens": [seq_len, seq_len, 5]}),
+                   shard / "part-0.parquet")
+
+
+def _edit_ledger(out: Path, edit) -> None:
+    m = json.loads((out / "metrics.json").read_text())
+    edit(m["stages"])
+    (out / "metrics.json").write_text(json.dumps(m))
+
+
+def _edit_shard(out: Path, edit) -> None:
+    path = out / "train_shards" / "shard=0" / "part-0.parquet"
+    pq.write_table(pa.Table.from_pylist(edit(pq.read_table(path).to_pylist())), path)
+
+
+def _move_to_shard_1(out: Path) -> None:
+    path = out / "train_shards" / "shard=0" / "part-0.parquet"
+    rows = pq.read_table(path).to_pylist()
+    pq.write_table(pa.Table.from_pylist(rows[:2]), path)
+    (out / "train_shards" / "shard=1").mkdir()
+    pq.write_table(pa.Table.from_pylist(rows[2:]),
+                   out / "train_shards" / "shard=1" / "part-0.parquet")
+
+
+@pytest.mark.parametrize("corrupt", [
+    lambda out: _edit_ledger(out, lambda s: s["curate"]["rejects_by_reason"].update(c4=3)),
+    lambda out: _edit_ledger(out, lambda s: s["curate"]["rejects_by_reason"].pop("near_dup")),
+    lambda out: _edit_ledger(out, lambda s: s["extract"].update(out=s["extract"]["out"] - 1)),
+    lambda out: _edit_ledger(out, lambda s: s["split"].update(val=2)),
+    lambda out: _edit_shard(out, lambda rows: rows[:2]),
+    lambda out: _edit_shard(out, lambda rows: [dict(r, n_tokens=r["n_tokens"] - 1)
+                                               for r in rows]),
+    lambda out: _move_to_shard_1(out),
+    lambda out: (out / "metrics.json").unlink(),
+], ids=["reject-count", "missed-near-dup", "dropped-doc", "split-count", "dropped-sequence",
+        "short-sequence", "wrong-shard", "no-ledger"])
+def test_corpus_build_check(small, tmp_path, corrupt):
+    inputs, manifest = gen.generate("corpus-build", 3, tmp_path / "in")
+    out = tmp_path / "out"
+    _corpus_output(manifest, out)
+    assert checks.check_corpus_build(inputs, manifest, 3, out) == []
+    corrupt(out)
+    assert checks.check_corpus_build(inputs, manifest, 3, out)
+
+
 # -- metric names ---------------------------------------------------------------------
 
 
@@ -217,4 +283,10 @@ def test_call_site_buckets_cover_the_plans():
         "plans.job.write_s", "plans.job.lineage_reread_s",
         "plans.incremental.corpus_write_s", "plans.incremental.diff_write_s",
         "plans.incremental.metrics_s",
+        *(f"plans.corpus_build.{stage}_s" for stage in layers.CORPUS_STAGES),
     }
+
+
+def test_overlapping_jobs_count_once():
+    assert layers._covered([(0, 1000), (500, 2000), (3000, 3500)]) == 2.5
+    assert layers._covered([]) == 0.0
