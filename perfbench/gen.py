@@ -9,9 +9,9 @@ timed code path computed.
 
 Inputs live under ``perfbench/.cache/<workload>-s<seed>-<size>-<src>/`` and
 are reused when the same (workload, seed, size) comes back for the same
-package sources: ``<src>`` is a digest of ``wpextract_spark``'s source
-files, because the generators call the package, so two commits never share
-inputs.
+sources: ``<src>`` is a digest of ``wpextract_spark``'s source files and of
+this module, because the generators call the package, so two commits never
+share inputs.
 """
 
 from __future__ import annotations
@@ -440,10 +440,10 @@ GENERATORS = {
 
 
 @functools.cache
-def package_digest() -> str:
-    """Digest of the package's source files."""
+def source_digest() -> str:
+    """Digest of the package's source files and of this module."""
     h = hashlib.sha256()
-    for path in sorted((ROOT / "wpextract_spark").rglob("*.py")):
+    for path in [*sorted((ROOT / "wpextract_spark").rglob("*.py")), Path(__file__).resolve()]:
         h.update(path.relative_to(ROOT).as_posix().encode() + b"\0" + path.read_bytes())
     return h.hexdigest()[:12]
 
@@ -451,7 +451,7 @@ def package_digest() -> str:
 def generate(workload: str, seed: int, root: Path = CACHE) -> tuple[Path, dict]:
     """Write (or reuse) the inputs of ``workload`` for ``seed``; returns the
     input directory and its manifest."""
-    out = root / f"{workload}-s{seed}-{SIZES[workload]}-{package_digest()}"
+    out = root / f"{workload}-s{seed}-{SIZES[workload]}-{source_digest()}"
     manifest = out / "manifest.json"
     if manifest.exists():
         return out, json.loads(manifest.read_text())
