@@ -5,10 +5,13 @@ The correctness driver samples the FIRST 50 entries of
 query keeps accumulating hard driver signal, this script orders the dict
 stalest-first:
 
-1. never driver-hash-green (no CORRECTNESS row, or only ``err`` rows),
-2. ascending by the last round with a green row,
-3. ties broken by how many rounds ever saw the query (fewest first),
-4. final tie-break: current registry order (stable).
+1. uncovered first: a query that is neither in the last round's
+   CORRECTNESS keys nor hash-green in >= 2 rounds leads the window, since
+   it has no other route to driver coverage;
+2. never driver-hash-green (no CORRECTNESS row, or only ``err`` rows),
+3. ascending by the last round with a green row,
+4. ties broken by how many rounds ever saw the query (fewest first),
+5. final tie-break: current registry order (stable).
 
 It rewrites the ``QUERIES = {...}`` block of ``plans/queries.py`` in place,
 preserving each entry's trailing comment, and prints the resulting window.
@@ -72,7 +75,8 @@ def staleness_order(
         greens = [i + 1 for i, r in enumerate(history) if r.get(name)]
         seen = [i + 1 for i, r in enumerate(history) if name in r]
         last_green = max(greens, default=0)
-        return (last_green, len(seen), pos[name])
+        covered = name in history[-1] or len(greens) >= 2
+        return (covered, last_green, len(seen), pos[name])
 
     return sorted(names, key=key)
 

@@ -244,3 +244,30 @@ def test_containment_short_docs_never_divide_by_zero(spark):
         [("a", "one two"), ("b", ""), ("c", "one two")], ["doc_id", "text"]
     )
     assert containment_pairs(docs).collect() == []  # gram-less: no pairs
+
+
+def test_banded_pairs_cap_payload_and_multiplicity(spark):
+    """The one capped bucket self-join: a key with exactly max_bucket rows
+    keeps its pairs, one with max_bucket + 1 is dropped, None keeps
+    everything, id_a < id_b, one row per shared key, payload as a_/b_."""
+    from wpextract_spark.operators.dedup import banded_pairs
+
+    rows = (
+        [(1, "k2", "p1"), (2, "k2", "p2")]  # exactly max_bucket=2 rows
+        + [(3, "k3", "p3"), (4, "k3", "p4"), (5, "k3", "p5")]  # max_bucket+1
+        + [(1, "k2b", "p1"), (2, "k2b", "p2")]  # 1 and 2 share a second key
+        + [(6, "solo", "p6")]
+    )
+    keyed = spark.createDataFrame(rows, "id long, key string, tag string")
+
+    def pairs(max_bucket, payload=()):
+        return sorted(
+            tuple(r) for r in banded_pairs(keyed, "id", "key", max_bucket, payload).collect()
+        )
+
+    assert pairs(2) == [(1, 2), (1, 2)]
+    assert pairs(None) == [(1, 2), (1, 2), (3, 4), (3, 5), (4, 5)]
+    assert all(a < b for a, b in pairs(None))
+    out = banded_pairs(keyed, "id", "key", 2, payload=("tag",))
+    assert out.columns == ["id_a", "id_b", "a_tag", "b_tag"]
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2, "p1", "p2")] * 2

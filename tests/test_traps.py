@@ -1,5 +1,6 @@
 """Crawler-trap detection: pattern masking + the two-sided flag."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from wpextract_spark.operators.traps import url_pattern, url_trap_signals
@@ -91,3 +92,7 @@ def test_pathological_path_min_repeats(spark):
     )
     assert df.select(pathological_path("url", min_repeats=2)).collect()[0][0]
     assert not df.select(pathological_path("url", min_repeats=3)).collect()[0][0]
+    # a window below two would run sequence(1, 0), which counts down
+    for bad in (1, 0, -1):
+        with pytest.raises(ValueError, match="min_repeats"):
+            pathological_path("url", min_repeats=bad)

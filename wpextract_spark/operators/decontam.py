@@ -20,34 +20,13 @@ corpus-sized shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wpextract_spark.operators.dedup import WS
+from wpextract_spark.operators.dedup import _words, word_ngrams
 
 #: Default contamination window, in whitespace tokens.
 NGRAM_N = 13
-
-
-def _tokens(text_col: str) -> Column:
-    """Lowercased whitespace tokens; the engine-identical WS class keeps the
-    Spark and oracle tokenizations byte-for-byte equal."""
-    return F.split(F.trim(F.lower(F.col(text_col))), WS)
-
-
-def _grams(tokens: Column, n: int) -> Column:
-    """All length-``n`` windows of ``tokens``, space-joined. Built with
-    sequence+slice (pure JVM expressions, no UDF); empty when the document
-    has fewer than ``n`` tokens — guarded explicitly because
-    ``sequence(1, 0)`` counts *down* in Spark rather than yielding []."""
-    count = F.size(tokens) - F.lit(n - 1)
-    return F.when(
-        count >= 1,
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.array_join(F.slice(tokens, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def benchmark_grams(
@@ -55,10 +34,8 @@ def benchmark_grams(
 ) -> DataFrame:
     """Distinct contamination grams of the benchmark set: one ``gram``
     column, ready to broadcast."""
-    return (
-        benchmark.select(F.explode(_grams(_tokens(text_col), n)).alias("gram"))
-        .distinct()
-    )
+    grams = word_ngrams(_words(text_col, lower=True), n)
+    return benchmark.select(F.explode(grams).alias("gram")).distinct()
 
 
 def ngram_decontaminate(
@@ -78,7 +55,8 @@ def ngram_decontaminate(
     """
     grams = benchmark_grams(benchmark, bench_text_col, n)
     doc_grams = docs.select(
-        F.col(id_col), F.explode(_grams(_tokens(text_col), n)).alias("gram")
+        F.col(id_col),
+        F.explode(word_ngrams(_words(text_col, lower=True), n)).alias("gram"),
     )
     hits = (
         doc_grams.join(F.broadcast(grams), "gram")

@@ -6,19 +6,23 @@ reproducible in any engine (the DuckDB oracles run the same expressions).
 
 Scale notes:
 * exact dedup: one hash + one shuffle on the hash key (uniform by design);
-* MinHash: explode-distinct words is a flatMap + partial-agg (map-side
-  combine) before the per-doc groupBy — the shuffle carries (doc, word-min)
-  partial rows, not raw shingles;
-* LSH banding: candidate generation shuffles on band keys; a band bucket with
-  B docs yields B² candidate pairs, so bucket width is the skew knob — cap
-  with more bands/rows at scale;
-* n-gram Jaccard: the gram self-join is quadratic per shared gram — it is a
-  verifier for candidate pairs, not a corpus-wide sweep (LSH prunes first).
+* MinHash: row-local ``array_min`` over the distinct-word array — the
+  signature never shuffles;
+* banded self-joins: every near-dup proposer (MinHash LSH bands, SimHash
+  chunks, span grams, embedding sign-LSH buckets, propose-free n-gram
+  grams) goes through :func:`banded_pairs`, the one place the mega-bucket
+  cap lives. A bucket of B docs yields B²/2 pairs; the cap bounds that per
+  key, and ``None`` leaves the join uncapped;
+* uncapped paths: the propose-free gram self-join of
+  :func:`ngram_jaccard_pairs` / :func:`containment_pairs` (no
+  ``candidates``) and ``span_dup_pairs(max_gram_docs=None)`` are quadratic
+  per shared gram — verifiers for small slices, not corpus-wide sweeps
+  (pass LSH ``candidates`` at scale).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Split pattern for whitespace tokenization, shared with the oracles.
@@ -28,8 +32,67 @@ from pyspark.sql import functions as F
 WS = r"[ \t\n\x0B\f\r]+"
 
 
-def _words(text_col: str):
-    return F.split(F.trim(F.col(text_col)), WS)
+def _words(text_col: str, lower: bool = False) -> Column:
+    """Whitespace tokens of ``text_col`` (lowercased first if ``lower``)."""
+    text = F.lower(F.col(text_col)) if lower else F.col(text_col)
+    return F.split(F.trim(text), WS)
+
+
+def word_ngrams(tokens: Column, n: int) -> Column:
+    """All length-``n`` windows of ``tokens``, space-joined, in order (not
+    deduplicated). Built with sequence+slice (pure JVM expressions, no UDF);
+    empty when the document has fewer than ``n`` tokens — guarded
+    explicitly because ``sequence(1, 0)`` counts *down* in Spark rather
+    than yielding [], and one short or empty doc must not abort a
+    corpus-scale stage. (DuckDB's range() is already empty for negative
+    stops, so the oracles agree.)"""
+    count = F.size(tokens) - F.lit(n - 1)
+    return F.when(
+        count >= 1,
+        F.transform(
+            F.sequence(F.lit(1), count),
+            lambda i: F.array_join(F.slice(tokens, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def banded_pairs(
+    keyed: DataFrame,
+    id_col: str,
+    key_col: str,
+    max_bucket: int | None,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs of ``keyed`` rows sharing a ``key_col`` value: the
+    capped bucket self-join behind every near-dup operator.
+
+    Output: ``(id_a, id_b, a_<c>, b_<c> for c in payload)``, ``id_a <
+    id_b``, one row per shared key — callers either count rows per pair or
+    verify on the payload and ``distinct``.
+
+    ``max_bucket`` drops keys held by more than that many rows before the
+    join — the mega-bucket guard. A bucket of B rows emits B²/2 pairs, so
+    one degenerate key (boilerplate-only pages, empty text, collapsed
+    vectors) turns the join quadratic; capping bounds the worst case at
+    ``keys * max_bucket^2 / 2`` and loses only pairs some other key can
+    still propose. The cap costs one shuffle on ``key_col``, which the join
+    re-uses, so AQE plans scan->window->join without a second exchange of
+    the big side. Pass None to disable.
+    """
+    if max_bucket is not None:
+        bucket_n = F.count("*").over(Window.partitionBy(key_col))
+        keyed = keyed.withColumn("_n", bucket_n).where(F.col("_n") <= max_bucket).drop("_n")
+    return (
+        keyed.alias("l")
+        .join(keyed.alias("r"), F.col(f"l.{key_col}") == F.col(f"r.{key_col}"))
+        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            *[F.col(f"l.{c}").alias(f"a_{c}") for c in payload],
+            *[F.col(f"r.{c}").alias(f"b_{c}") for c in payload],
+        )
+    )
 
 
 def exact_duplicate_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -87,14 +150,8 @@ def lsh_candidate_pairs(
 
     Signature split into ``bands`` rows of ``k/bands`` values; docs sharing a
     band bucket become a candidate pair (a < b). Output: (id_a, id_b, n_bands)
-    with the number of agreeing bands.
-
-    ``max_bucket`` drops band buckets holding more than that many documents
-    before the self-join — the mega-bucket guard. A bucket of B docs emits
-    B^2/2 pairs, so one degenerate key (boilerplate-only pages, empty text)
-    turns the join quadratic; capping bounds the worst case at
-    ``buckets * max_bucket^2 / 2`` and loses only candidates that ``bands``
-    other bands can still propose. Pass None to disable.
+    with the number of agreeing bands. ``max_bucket`` caps band buckets
+    before the self-join (see :func:`banded_pairs`); None disables it.
     """
     if k % bands:
         raise ValueError("k must be divisible by bands")
@@ -105,20 +162,9 @@ def lsh_candidate_pairs(
         for b in range(bands)
     ]
     banded = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key"))
-    if max_bucket is not None:
-        # One extra shuffle on band_key; the self-join below re-uses the same
-        # hash partitioning, so AQE plans scan->window->join without a second
-        # exchange of the big side.
-        bucket_n = F.count("*").over(Window.partitionBy("band_key"))
-        banded = banded.withColumn("_n", bucket_n).where(F.col("_n") <= max_bucket).drop("_n")
-    left = banded.alias("l")
-    right = banded.alias("r")
     return (
-        left.join(right, F.col("l.band_key") == F.col("r.band_key"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
+        banded_pairs(banded, id_col, "band_key", max_bucket)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_bands"))
     )
 
@@ -133,21 +179,7 @@ def _gram_pair_counts(
     """(id_a, id_b, common, na, nb) for every pair sharing >= 1 distinct
     word-n-gram — the shared propose/verify machinery behind both the
     symmetric (Jaccard) and directed (containment) gram metrics."""
-    words = _words(text_col)
-    # Docs with fewer than n words yield NO grams: sequence(0, size-n) with
-    # size < n would DESCEND (0, -1, ...) and slice(words, 0, n) aborts the
-    # whole stage — one short/empty doc must not kill a corpus-scale job.
-    # (DuckDB's range() is already empty for negative stops, so the oracle
-    # agrees.)
-    grams = F.when(
-        F.size(words) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - n),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.array_distinct(word_ngrams(_words(text_col), n))
     if candidates is not None:
         # Verify path: ship each doc's DISTINCT gram ARRAY to its candidate
         # pairs (two id-keyed joins) and intersect per pair in one JVM array
@@ -180,18 +212,16 @@ def _gram_pair_counts(
             )
         )
 
-    # Propose-free path: self-join on shared grams. Explode the gram
-    # expression INLINE: explode over a separately projected alias column
-    # measures ~10x slower here (the generate re-evaluates the projected
-    # array), and a size()>0 pre-filter is unnecessary — explode drops empty
-    # arrays and the inner joins exclude gram-less docs.
+    # Propose-free path: UNCAPPED self-join on shared grams. Explode the
+    # gram expression INLINE: explode over a separately projected alias
+    # column measures ~10x slower here (the generate re-evaluates the
+    # projected array), and a size()>0 pre-filter is unnecessary — explode
+    # drops empty arrays and the inner joins exclude gram-less docs.
     sizes = docs.select(F.col(id_col), F.size(grams).alias("n_grams"))
     exploded = docs.select(F.col(id_col), F.explode(grams).alias("g"))
     pairs = (
-        exploded.alias("l")
-        .join(exploded.alias("r"), F.col("l.g") == F.col("r.g"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        banded_pairs(exploded, id_col, "g", None)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("common"))
     )
     return pairs.join(
@@ -210,8 +240,9 @@ def ngram_jaccard_pairs(
     """Document pairs with word-``n``-gram Jaccard similarity >= threshold.
 
     Output: (id_a, id_b, jaccard). Without ``candidates`` this self-joins on
-    shared grams — quadratic in per-gram document frequency, only safe on
-    small slices. With ``candidates`` (a DataFrame with id_a/id_b, e.g. from
+    shared grams through :func:`banded_pairs` with NO cap — quadratic in
+    per-gram document frequency, only safe on small slices. With
+    ``candidates`` (a DataFrame with id_a/id_b, e.g. from
     :func:`lsh_candidate_pairs`) the join fans out linearly in
     ``|candidates| x grams-per-doc``: the scale path is LSH propose ->
     Jaccard verify.
@@ -296,11 +327,9 @@ def simhash_near_dup_pairs(
     old 16/2 default that was 512 keys, i.e. bucket width O(N/512) and a
     quadratic pair blowup at corpus scale. The 64/8 default gives 8 * 2^8 =
     2048 structurally *selective* keys (random docs rarely agree on 8
-    signature bits), and ``max_bucket`` drops degenerate chunk buckets
-    (boilerplate/empty text collapses signatures) before the self-join,
-    exactly like :func:`lsh_candidate_pairs` — bounding the worst case at
-    ``keys * max_bucket^2 / 2`` pairs. Capped buckets lose only pairs the
-    remaining ``bands - 1`` chunks can still propose. Pass None to disable.
+    signature bits), and ``max_bucket`` caps degenerate chunk buckets
+    (boilerplate/empty text collapses signatures) before the self-join
+    (see :func:`banded_pairs`); None disables it.
     """
     if bits % bands:
         raise ValueError("bits must be divisible by bands")
@@ -313,11 +342,6 @@ def simhash_near_dup_pairs(
     banded = sig.select(
         F.col(id_col), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("chunk")
     )
-    if max_bucket is not None:
-        bucket_n = F.count("*").over(Window.partitionBy("chunk"))
-        banded = banded.withColumn("_n", bucket_n).where(F.col("_n") <= max_bucket).drop("_n")
-    left = banded.alias("l")
-    right = banded.alias("r")
     # Hamming via popcount(xor) over 32-bit segments of the signature: a few
     # JVM ops per pair instead of `bits` chained substring comparisons (~10x
     # on the candidate sweep, which dominates this operator). Segmenting keeps
@@ -329,17 +353,12 @@ def simhash_near_dup_pairs(
         return F.conv(F.substring(F.col(col), s * 32 + 1, 32), 2, 10).cast("long")
 
     hamming = sum(
-        F.bit_count(_seg("l.simhash", s).bitwiseXOR(_seg("r.simhash", s)))
+        F.bit_count(_seg("a_simhash", s).bitwiseXOR(_seg("b_simhash", s)))
         for s in range(n_seg)
     )
     return (
-        left.join(right, F.col("l.chunk") == F.col("r.chunk"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
+        banded_pairs(banded, id_col, "chunk", max_bucket, payload=("simhash",))
+        .select("id_a", "id_b", hamming.alias("hamming"))
         # Filter BEFORE the distinct: the near-dup predicate kills ~99% of
         # candidate pairs, so the pair-dedup shuffle moves only survivors.
         .where(F.col("hamming") <= max_hamming)
@@ -507,33 +526,21 @@ def span_dup_pairs(
     near-dup misses). Output: ``(id_a, id_b, n_shared_spans)`` counting
     *distinct* shared grams, ``id_a < id_b``.
 
-    Scale shape: per-doc distinct grams are md5-hashed (fixed 32-byte keys,
-    not 13-word strings) and self-joined on the hash — quadratic per shared
-    gram, so ``max_gram_docs`` drops grams appearing in more than that many
-    documents before the join. That cap is semantic as well as protective: a
-    span in 10k documents is boilerplate, not copying, and boilerplate is
-    ``line_dedup``'s job. Pass None to disable.
+    Scale shape: per-doc distinct grams of the lowercased tokens are
+    md5-hashed (fixed 32-byte keys, not 13-word strings) and self-joined on
+    the hash through :func:`banded_pairs`, with ``max_gram_docs`` as the
+    bucket cap. That cap is semantic as well as protective: a span in 10k
+    documents is boilerplate, not copying, and boilerplate is
+    ``line_dedup``'s job. Pass None to disable it (the join is then
+    quadratic per shared gram).
     """
-    from wpextract_spark.operators.decontam import _grams, _tokens
-
     grams = docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(_grams(_tokens(text_col), n))).alias("g"),
+        F.explode(F.array_distinct(word_ngrams(_words(text_col, lower=True), n))).alias("g"),
     ).select(F.col(id_col), F.md5(F.col("g")).alias("gram"))
-    if max_gram_docs is not None:
-        freq = F.count("*").over(Window.partitionBy("gram"))
-        grams = grams.withColumn("_n", freq).where(
-            F.col("_n") <= max_gram_docs
-        ).drop("_n")
-    left = grams.alias("l")
-    right = grams.alias("r")
     return (
-        left.join(right, F.col("l.gram") == F.col("r.gram"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
+        banded_pairs(grams, id_col, "gram", max_gram_docs)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared_spans"))
     )
 

@@ -20,6 +20,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wpextract_spark.operators.dedup import banded_pairs
+
 
 @contextmanager
 def _interpreted_eval(df: DataFrame):
@@ -298,11 +300,10 @@ def embedding_near_dup_pairs(
     total — an O(N^2/16) self-join at corpus scale. 8 planes give 256
     buckets per set (bucket width O(N/256)); unioning 4 sets restores the
     recall the extra planes cost (p^8 per set -> 1-(1-p^8)^4 overall, ~90%
-    at cosine 0.95). ``max_bucket`` drops degenerate buckets (e.g. a mass of
+    at cosine 0.95). ``max_bucket`` caps degenerate buckets (e.g. a mass of
     near-zero or duplicate-template vectors collapsing to one key) before
-    the join, bounding the worst case at ``sets * 2^planes * max_bucket^2 /
-    2`` pairs; capped buckets lose only pairs another set can still propose.
-    Pass None to disable.
+    the join (see :func:`~wpextract_spark.operators.dedup.banded_pairs`);
+    None disables it.
     """
     probe = embeddings.select(F.size(vec_col)).first()
     if probe is None:  # empty input: zero pairs, not a driver crash
@@ -320,24 +321,10 @@ def embedding_near_dup_pairs(
     bucketed = embeddings.select(
         F.col(id_col), vec.alias("v"), F.explode(F.array(*bucket_cols)).alias("bucket")
     )
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        bucket_n = F.count("*").over(Window.partitionBy("bucket"))
-        bucketed = (
-            bucketed.withColumn("_n", bucket_n).where(F.col("_n") <= max_bucket).drop("_n")
-        )
-    left = bucketed.alias("l")
-    right = bucketed.alias("r")
-    sim = F.round(cosine(F.col("l.v"), F.col("r.v")), 6)
+    sim = F.round(cosine(F.col("a_v"), F.col("b_v")), 6)
     return (
-        left.join(right, F.col("l.bucket") == F.col("r.bucket"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            sim.alias("cos_sim"),
-        )
+        banded_pairs(bucketed, id_col, "bucket", max_bucket, payload=("v",))
+        .select("id_a", "id_b", sim.alias("cos_sim"))
         # Verify BEFORE the cross-set dedup so the distinct shuffle moves
         # only surviving near-dup pairs, not every candidate.
         .where(F.col("cos_sim") >= threshold)
